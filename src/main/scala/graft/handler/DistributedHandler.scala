@@ -10,14 +10,15 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   *  - `DistributedHandler(address)` (:20) → session against `local[*]` or a
   *    cluster master URL; an existing session is reused (`connect` to a
   *    running cluster ≈ dask's connect-to-scheduler).
-  *  - `client.map(f, *iterables)` (:39) → [[map]] / [[map2]]: distribute
-  *    the items as a Dataset and apply `f` partition-parallel. The returned
-  *    lazy Dataset IS the futures handle — nothing runs until gathered.
+  *  - `client.map(f, *iterables)` (:39) → [[map]] / [[map2]] / [[map3]] /
+  *    [[mapN]]: the driver cuts the items into contiguous slices (copies:
+  *    items must be serializable, like `f`) that ride in the task
+  *    descriptions (`parallelize`); `f` runs in the task, no shuffle. The
+  *    lazy Dataset IS the futures handle, gathered in input order.
   *  - `batched_map(f, *its, batch_size)` (:93, dask/distributed#2181: don't
-  *    drown the scheduler with one task per item) → [[batchedMap]]: bound
-  *    the number of concurrent tasks by sizing partitions; the driver holds
-  *    one task per PARTITION, never per item — at 100 TB this is exactly
-  *    Spark's native task model, so batching is free.
+  *    drown the scheduler with one task per item) → [[batchedMap]]: one
+  *    task per `batchSize` contiguous items; `batch_size` omitted, one
+  *    per worker — worker-count tasks in flight, as in the reference.
   *  - `gather(futures)` (:146) → [[gather]] (`collect`) — the only
   *    driver-side materialization point, by user request.
   *  - `close()` / context manager (:165) → [[close]] / [[DistributedHandler.withHandler]]:
@@ -50,64 +51,62 @@ final class DistributedHandler private (
   /** Reference `_get_batch_size`: the cluster's worker/thread count. */
   def defaultBatchSize: Int = spark.sparkContext.defaultParallelism
 
-  /** Distributed map of `f` over `items` — partition-parallel, lazy. */
-  def map[A, B: Encoder](items: Seq[A])(f: A => B)(
-      implicit ea: Encoder[A]): Dataset[B] =
-    spark.createDataset(items).map(f)
+  /** Distributed map of `f` over `items` — one batch per worker, lazy. */
+  def map[A, B: Encoder](items: Seq[A])(f: A => B): Dataset[B] =
+    sliced(Seq(items), None)(r => f(r(0).asInstanceOf[A]))
 
   /** Reference `client.map(f, it1, it2)`: zip iterables, apply binary f. */
-  def map2[A, B, C: Encoder](as: Seq[A], bs: Seq[B])(f: (A, B) => C)(
-      implicit et: Encoder[(A, B)]): Dataset[C] =
-    spark.createDataset(as.zip(bs)).map { case (a, b) => f(a, b) }
+  def map2[A, B, C: Encoder](as: Seq[A], bs: Seq[B])(
+      f: (A, B) => C): Dataset[C] = sliced(Seq(as, bs), None)(r =>
+    f(r(0).asInstanceOf[A], r(1).asInstanceOf[B]))
 
   /** Reference `client.map(f, it1, it2, it3)`: ternary typed form. */
   def map3[A, B, C, D: Encoder](as: Seq[A], bs: Seq[B], cs: Seq[C])(
-      f: (A, B, C) => D)(implicit et: Encoder[(A, B, C)]): Dataset[D] =
-    spark.createDataset(as.lazyZip(bs).lazyZip(cs).toSeq)
-      .map { case (a, b, c) => f(a, b, c) }
+      f: (A, B, C) => D): Dataset[D] = sliced(Seq(as, bs, cs), None)(r =>
+    f(r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C]))
 
   /** Reference `client.map(f, *iterables)` at arbitrary arity: iterables
     * are zipped positionally (truncating to the shortest, like `zip`) and
-    * `f` receives one `Seq` of aligned arguments. Heterogeneous element
-    * types mean no product Encoder exists, so rows ride kryo — prefer the
-    * typed `map`/`map2`/`map3` when arity is known.
+    * `f` receives one `Seq` of aligned arguments per row.
     */
   def mapN[B: Encoder](iterables: Seq[Seq[Any]])(
-      f: Seq[Any] => B): Dataset[B] =
-    spark.createDataset(zipped(iterables))(
-      org.apache.spark.sql.Encoders.kryo[Seq[Any]]).map(f)
+      f: Seq[Any] => B): Dataset[B] = sliced(iterables, None)(f)
 
   /** Variadic `batched_map(f, *iterables, batch_size)` (reference :93) —
     * [[mapN]] zipping with [[batchedMap]]'s task-count bounding.
     */
-  def batchedMapN[B: Encoder](iterables: Seq[Seq[Any]],
-      batchSize: Int = defaultBatchSize)(f: Seq[Any] => B): Dataset[B] = {
-    val rows = zipped(iterables)
-    val bs = math.max(1, batchSize)
-    val numParts = math.max(1, (rows.size + bs - 1) / bs)
-    spark.createDataset(rows)(
-      org.apache.spark.sql.Encoders.kryo[Seq[Any]])
-      .repartition(numParts).mapPartitions(_.map(f))
-  }
+  def batchedMapN[B: Encoder](iterables: Seq[Seq[Any]], batchSize: Int)(
+      f: Seq[Any] => B): Dataset[B] = sliced(iterables, Some(batchSize))(f)
 
-  private def zipped(iterables: Seq[Seq[Any]]): Seq[Seq[Any]] = {
-    require(iterables.nonEmpty, "map needs at least one iterable")
-    val indexed = iterables.map(_.toIndexedSeq)
-    val n = indexed.map(_.size).min
-    (0 until n).map(i => indexed.map(_(i)))
-  }
+  /** [[batchedMapN]] with `batch_size` omitted: one batch per worker. */
+  def batchedMapN[B: Encoder](iterables: Seq[Seq[Any]])(
+      f: Seq[Any] => B): Dataset[B] = mapN(iterables)(f)
 
-  /** Chunked map: at most `ceil(n / batchSize)` concurrent tasks, each
-    * processing `batchSize` items — the scheduler never holds per-item
-    * state (the reference's whole reason to exist).
+  /** Chunked map: `ceil(n / batchSize)` tasks of at most `batchSize`
+    * contiguous items — the scheduler never holds per-item state. */
+  def batchedMap[A, B: Encoder](items: Seq[A], batchSize: Int)(
+      f: A => B): Dataset[B] =
+    sliced(Seq(items), Some(batchSize))(r => f(r(0).asInstanceOf[A]))
+
+  /** [[batchedMap]] with `batch_size` omitted: one batch per worker. */
+  def batchedMap[A, B: Encoder](items: Seq[A])(f: A => B): Dataset[B] =
+    map(items)(f)
+
+  /** Cuts `columns`, truncated to the shortest, into contiguous chunks of
+    * at most `batch` rows (else one per worker) at call time, as copies a
+    * caller's later array writes cannot reach; `f` runs inside the tasks.
     */
-  def batchedMap[A, B: Encoder](items: Seq[A],
-      batchSize: Int = defaultBatchSize)(f: A => B)(
-      implicit ea: Encoder[A]): Dataset[B] = {
-    val bs = math.max(1, batchSize)
-    val numParts = math.max(1, (items.size + bs - 1) / bs)
-    spark.createDataset(items).repartition(numParts)
-      .mapPartitions(_.map(f))
+  private def sliced[B: Encoder](columns: Seq[Seq[Any]], batch: Option[Int])(
+      f: Seq[Any] => B): Dataset[B] = {
+    require(columns.nonEmpty, "map needs at least one iterable")
+    val cols = columns.map(_.toIndexedSeq)
+    val n = cols.map(_.size).min
+    val k = batch.fold(defaultBatchSize)(b => (n - 1) / (b max 1) + 1) max 1
+    val chunks = (0 until k).map(s =>
+      cols.map(_.slice((s.toLong * n / k).toInt, ((s + 1L) * n / k).toInt)))
+    spark.createDataset(spark.sparkContext.parallelize(chunks, k).mapPartitions(
+      _.flatMap(c => Iterator.range(0, c(0).size).map(i => f(c.map(_(i))))))(
+      implicitly[Encoder[B]].clsTag))
   }
 
   /** Distributed map over an EXISTING Dataset — the form that matters at

@@ -8,8 +8,8 @@ import graft.Q
   * every other section of SURVEY §2 hash-gates through the driver, and
   * the handler should too, not just spec-cover. `handler_map` runs the
   * reference's n-ary `client.map(f, it1, it2)` shape through [[DistributedHandler.mapN]]
-  * (positional zip, kryo rows — the arity-generic path) over two
-  * generated 1000-element iterables, then aggregates the mapped values
+  * (positional chunks zipped in the task — the arity-generic path) over
+  * two generated 1000-element iterables, then aggregates the mapped values
   * so the result is order-insensitive (the reference's own tests compare
   * map results order-insensitively: tests/test_distributed_handler.py).
   * The DuckDB mirror states f and the aggregation directly over
@@ -46,8 +46,8 @@ object HandlerQueries {
     * `batched_map(f, seq, batch_size)` — the bounded-scheduler chunked
     * map (distributed_handler.py:93, the dask/distributed#2181
     * workaround that is the library's whole reason to exist). A small
-    * batch_size forces the many-partition path (ceil(N/bs) = 40 tasks
-    * for N=1000, bs=25 — the repartition actually exercises), f is a
+    * batch_size forces the many-batch path (ceil(N/bs) = 40 contiguous
+    * slices, one task each, for N=1000, bs=25), f is a
     * conditional integer transform, and the result aggregates
     * order-insensitively (the reference's own test convention —
     * batching must never change WHAT is computed, only how many tasks
